@@ -459,7 +459,7 @@ object SparkEntry {
       "*(CAST(p[1] AS DOUBLE)-CAST(p[2] AS DOUBLE))))"
 
   /** CTE projecting per-row d0..d3 and the argmin cluster (lowest-index
-    * ties — the same CASE shape as `VectorFunctions.assignCol`). */
+    * ties — `VectorFunctions.argminCentroid`'s strict-`<` running min). */
   private def hpAssignSql(cols: String): String = {
     val k = hpCents.length
     val dDefs = hpCents.zipWithIndex
@@ -3722,8 +3722,8 @@ object SparkEntry {
          |FROM assigned a JOIN probed USING (cluster), q
          |ORDER BY score DESC, a.vec_id LIMIT 10""".stripMargin,
 
-    // generated from hpCents — argmin CASE chain identical in shape and
-    // arithmetic to VectorFunctions.assignCol (see hpAssignSql)
+    // generated from hpCents — argmin with the same arithmetic and
+    // lowest-index ties as VectorFunctions.argminCentroid (see hpAssignSql)
     "q31_kmeans_label" ->
       s"""WITH ${hpAssignSql("vec_id")}
          |SELECT cluster, count(*) AS n FROM a_

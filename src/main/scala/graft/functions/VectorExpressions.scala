@@ -124,9 +124,9 @@ case class VecSqDist(left: Expression, right: Expression) extends VecBinaryFold 
 /** Earliest-wins argmin of squared distance against a LITERAL float
   * codebook: `argmin_c Σᵢ (vᵢ − codebook(c)(i))²`, strict `<` running
   * min (ties → lowest index — KMapper.java:39 semantics, identical to
-  * the [[graft.functions.VectorFunctions.assignCol]] CASE chain and
-  * the `argminCentroid` Scala kernel: same per-centroid left-to-right
-  * double fold, null elements contribute 0, dim mismatch throws).
+  * the [[graft.functions.VectorFunctions.argminCentroid]] Scala kernel:
+  * same per-centroid left-to-right double fold, null elements
+  * contribute 0, dim mismatch throws).
   *
   * Why an expression and not a chain of [[VecSqDist]] comparisons:
   * the chain inlines each distance's generated code O(k²) times into

@@ -17,8 +17,11 @@ import graft.functions.VectorFunctions._
   * `groupBy` aggregation; only the O(k²) arithmetic runs on the driver.
   *
   * Preserved edge semantics (SURVEY §3.2): an empty cluster yields
-  * σ = NaN which propagates into the result (reference divides by a zero
-  * count, Main.java:93); duplicate centroids yield d = 0 → Infinity ratio.
+  * σ = 0/0 = NaN (reference divides by a zero count, Main.java:93), so
+  * every ratio it enters is NaN; the reference's `if (r > max)` running
+  * max skips NaN, leaving that cluster's max at -Infinity, and the DBI
+  * is -Infinity — not NaN. Duplicate centroids yield d = 0 → Infinity
+  * ratio (and -Infinity + Infinity = NaN if both occur).
   */
 object Dbi {
 
@@ -69,7 +72,8 @@ object Dbi {
       sumD(r.getInt(0)) = r.getDouble(1)
       cnt(r.getInt(0)) = r.getLong(2)
     }
-    // sigma_i = sum/count; empty cluster -> 0/0 = NaN (reference parity)
+    // sigma_i = sum/count; empty cluster -> 0/0 = NaN (reference parity;
+    // the running max below then leaves -Infinity for it)
     val sigma = Array.tabulate(k)(i => sumD(i) / cnt(i))
 
     // J2: k×k centroid distance matrix, driver-side (Main.java:78-83)

@@ -34,11 +34,10 @@ final case class KMeansModel(
 
   /** Label every row with its nearest centroid — a pure narrow map, no
     * shuffle (reference does this driver-side over the whole dataset,
-    * Main.java:345-355; we stay distributed). Always the codegen'd
-    * `VecSqDist` CASE-chain argmin (inside whole-stage codegen): small
-    * k is one chain, large k the chunked-combine form — identical
-    * semantics at any k (same double fold, same lowest-index ties),
-    * no ScalaUDF fallback anywhere on the labeling pass. */
+    * Main.java:345-355; we stay distributed). [[assignCol]]: the
+    * codegen'd `VecArgminSqDist` loop up to 8192 k·dim, the broadcast
+    * ScalaUDF kernel above it — identical picks either way (same double
+    * fold, same lowest-index ties as `argminCentroid`). */
   def transform(
       df: DataFrame,
       featuresCol: String = "features",

@@ -1903,35 +1903,16 @@ object Graph {
     if (useCsr(e.sparkSession, edgeHint / 2)) triangleCoreCsr(e, edgeHint)
     else triangleCoreWedge(e, edgeHint)
 
-  /** Triangle-close algorithm selector:
-    * `spark.graft.graph.triangleAlgo` = `auto` (default), `wedge`
-    * (the wedge-stream self-join + close join), or `csr` (grouped
-    * adjacency: per-edge array intersection, no wedge stream —
-    * [[triangleCoreCsr]]). Both are exact and parity-pinned in
-    * GraphSpec. `auto` picks csr while the oriented list fits the
-    * adjacency-broadcast envelope ([[csrMaxOrientedRows]]) and the
-    * always-scaling wedge shuffle plan above it — set by round-13
-    * min-of-8 A/B at sf0.1 (1.2M oriented rows: q119 3.34→2.12,
-    * q120 3.22→2.25, q129 3.70→2.28, q127 2.99→2.10 s, controls
-    * flat-to-worse under rising load), not theory. */
-  private[operators] def triangleAlgo(spark: SparkSession): String =
-    spark.conf.getOption("spark.graft.graph.triangleAlgo")
-      .getOrElse("auto") match {
-      case a @ ("auto" | "wedge" | "csr") => a
-      case bad => throw new IllegalArgumentException(
-        s"spark.graft.graph.triangleAlgo must be 'auto', 'wedge' or " +
-          s"'csr', got '$bad'")
-    }
-
-  /** Oriented-list row cap for the auto csr pick: the broadcast
+  /** Oriented-list row cap for the csr pick: the broadcast
     * adjacency packs one long per oriented edge plus one array row
     * per source node, so 2M rows ≈ 30-60 MB as a hashed relation —
     * comfortably inside executor memory with headroom over the 1.2M
-    * rows the A/B measured. Beyond it `auto` falls back to the wedge
-    * shuffle plan, whose exchanges scale with cluster width instead
-    * of a single broadcast (a 100 TB edge list must never be forced
-    * through one driver collect). Override with
-    * `spark.graft.graph.csrMaxOrientedRows`. */
+    * rows the A/B measured. Beyond it [[useCsr]] falls back to the
+    * wedge shuffle plan, whose exchanges scale with cluster width
+    * instead of a single broadcast (a 100 TB edge list must never be
+    * forced through one driver collect). Override with
+    * `spark.graft.graph.csrMaxOrientedRows`; 0 forces the wedge plan
+    * on any non-empty graph. */
   private[operators] def csrMaxOrientedRows(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.graph.csrMaxOrientedRows")
       .map { v =>
@@ -1943,26 +1924,17 @@ object Graph {
         }
       }.getOrElse(2000000L)
 
+  /** Triangle-close plan: csr (grouped adjacency, per-edge array
+    * intersection — [[triangleCoreCsr]]) while the oriented list fits
+    * the [[csrMaxOrientedRows]] broadcast envelope, the always-scaling
+    * wedge-stream shuffle plan above it. Both are exact and
+    * parity-pinned in GraphSpec. Set by round-13 min-of-8 A/B at sf0.1
+    * (1.2M oriented rows: q119 3.34→2.12, q120 3.22→2.25, q129
+    * 3.70→2.28, q127 2.99→2.10 s, controls flat-to-worse under rising
+    * load), not theory. */
   private[operators] def useCsr(
       spark: SparkSession, orientedRows: Long): Boolean =
-    triangleAlgo(spark) match {
-      case "csr" =>
-        // forcing csr does NOT bypass the broadcast envelope: a stale
-        // conf pinned on a graph 100× bigger than when it was set
-        // would force-collect the whole adjacency onto the driver and
-        // OOM. Fail soft to the wedge shuffle plan with a warning; the
-        // cap itself stays overridable via csrMaxOrientedRows.
-        val cap = csrMaxOrientedRows(spark)
-        val fits = orientedRows <= cap
-        if (!fits) org.slf4j.LoggerFactory.getLogger("graft.Graph").warn(
-          s"triangleAlgo=csr forced but orientedRows=$orientedRows > " +
-            s"csrMaxOrientedRows=$cap — falling back to the wedge " +
-            "shuffle plan (raise spark.graft.graph.csrMaxOrientedRows " +
-            "to force-broadcast anyway)")
-        fits
-      case "wedge" => false
-      case _       => orientedRows <= csrMaxOrientedRows(spark)
-    }
+    orientedRows <= csrMaxOrientedRows(spark)
 
   /** Grouped-adjacency (CSR-style) triangle counting: orient edges by
     * (degree, id) as in the wedge path, group each node's oriented
@@ -3007,13 +2979,6 @@ object Graph {
         .groupBy("src", "dst").agg(count(lit(1)).as("w"))
   }
 
-  /** Unpersist the cached RDD behind an eager `localCheckpoint`ed
-    * frame (Dataset.unpersist only reaches CacheManager entries, not
-    * checkpoint blocks). Only safe once nothing will read the frame
-    * again — a local checkpoint has no lineage to recompute from.
-    * A non-LogicalRDD plan here means a refactor inserted an operator
-    * between the checkpoint and this call — warn loudly so the
-    * resulting per-round block leak is visible instead of silent. */
   /** Eager localCheckpoint that keeps the executed plan's hash
     * partitioning visible (graftshim device — see there): a plain
     * checkpoint reports UnknownPartitioning under AQE, so every
@@ -3024,6 +2989,13 @@ object Graph {
   private[operators] def checkpointPartitioned(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftshim.localCheckpointPartitioned(df)
 
+  /** Unpersist the cached RDD behind an eager `localCheckpoint`ed
+    * frame (Dataset.unpersist only reaches CacheManager entries, not
+    * checkpoint blocks). Only safe once nothing will read the frame
+    * again — a local checkpoint has no lineage to recompute from.
+    * A non-LogicalRDD plan here means a refactor inserted an operator
+    * between the checkpoint and this call — warn loudly so the
+    * resulting per-round block leak is visible instead of silent. */
   private def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

@@ -71,7 +71,7 @@ object Quantization {
     * inline CASE-chain form overran janino's 64 KB method limit here
     * and silently fell back to interpreted eval). Narrow, codegen'd,
     * no UDF, no shuffle; picks bit-identical to
-    * [[graft.functions.VectorFunctions.assignCol]]. */
+    * [[graft.functions.VectorFunctions.argminCentroid]]. */
   private def codesCol(emb: org.apache.spark.sql.Column,
       cb: PQCodebooks): org.apache.spark.sql.Column =
     array((0 until cb.m).map { j =>

@@ -404,10 +404,10 @@ class PlanSpec extends SparkSpec {
     "no ScalaUDF fallback, and labels match the compiled running min") {
     import graft.functions.VectorFunctions.argminCentroid
     import org.apache.spark.sql.functions.col
-    // over parquet (an inline fixture constant-folds the whole chain
-    // into a LocalTableScan — the q181/q183 device): 64 centroids
-    // sampled from the corpus itself, so exact ties (a point that IS a
-    // centroid) exercise the earliest-wins chunk combine
+    // over parquet (an inline fixture constant-folds the whole
+    // projection into a LocalTableScan — the q181/q183 device): 64
+    // centroids sampled from the corpus itself, so exact ties (a point
+    // that IS a centroid) exercise the lowest-index tie rule
     val emb = sources.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<float>")
         .as("features"))
@@ -431,23 +431,24 @@ class PlanSpec extends SparkSpec {
   }
 
   test("KMeans.transform beyond the k·dim codegen budget switches to " +
-    "the broadcast kernel, bit-identical to the literal chain") {
-    import graft.functions.VectorFunctions.argminCentroid
+    "the broadcast kernel, bit-identical to the native argmin loop") {
+    import graft.functions.VectorFunctions.{argminCentroid, argminSqDistCol}
     import org.apache.spark.sql.functions.col
     val emb = sources.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<float>")
         .as("features"))
-    // 129 centroids × dim 64 = 8256 cells > the 8192 default budget:
-    // inlining them would build a multi-MB expression tree (the codegen
-    // cliff ADVICE r11 flagged), so assignCol must pick the broadcast
-    // kernel here — and produce the exact labels the chain produces.
+    // 129 centroids × dim 64 = 8256 cells > the 8192 budget: embedding
+    // them in the plan would re-ship a multi-MB codebook with every
+    // stage, so assignCol must pick the broadcast kernel here — and
+    // produce the exact labels the native loop produces.
     val cents = emb.orderBy("vec_id").limit(129)
       .select("features").collect().map(_.getSeq[Float](0).toArray)
     val model = graft.kmeans.KMeansModel(cents, 0, converged = true)
     val viaKernel = model.transform(emb)
     // executedPlan renders ScalaUDF as "UDF(...)"
-    assert(viaKernel.queryExecution.executedPlan.toString
-      .contains("UDF("), "expected the broadcast kernel above budget")
+    val pk = viaKernel.queryExecution.executedPlan.toString
+    assert(pk.contains("UDF("), "expected the broadcast kernel above budget")
+    assert(!pk.contains("vec_argmin_sqdist"), pk)
     val got = viaKernel.select("vec_id", "features", "cluster")
       .orderBy("vec_id").collect()
     assert(got.nonEmpty)
@@ -456,32 +457,17 @@ class PlanSpec extends SparkSpec {
       assert(r.getInt(2) === argminCentroid(v, cents),
         s"vec_id=${r.getLong(0)}")
     }
-    // raise the budget: same call compiles the CHAIN impl (forced —
-    // the default below-budget impl is now the native loop), and the
-    // two paths agree row-for-row (parity pin)
-    spark.conf.set("spark.graft.kmeans.maxCodegenCells", "100000")
-    spark.conf.set("spark.graft.kmeans.argminImpl", "chain")
-    try {
-      val viaChain = model.transform(emb)
-      val p = viaChain.queryExecution.executedPlan.toString
-      assert(!p.contains("UDF("), p)
-      assert(p.contains("vec_sqdist"), p)
-      val chain = viaChain.select("vec_id", "cluster").orderBy("vec_id")
-        .collect().map(r => (r.getLong(0), r.getInt(1)))
-      val kernel = got.map(r => (r.getLong(0), r.getInt(2)))
-      assert(chain.toSeq === kernel.toSeq)
-      // and the native impl at the same raised budget agrees too
-      spark.conf.set("spark.graft.kmeans.argminImpl", "native")
-      val viaNative = model.transform(emb)
-      assert(viaNative.queryExecution.executedPlan.toString
-        .contains("vec_argmin_sqdist"))
-      val native = viaNative.select("vec_id", "cluster").orderBy("vec_id")
-        .collect().map(r => (r.getLong(0), r.getInt(1)))
-      assert(native.toSeq === chain.toSeq)
-    } finally {
-      spark.conf.unset("spark.graft.kmeans.maxCodegenCells")
-      spark.conf.unset("spark.graft.kmeans.argminImpl")
-    }
+    // the ungated native loop over the same beyond-budget codebook
+    // agrees with the kernel row for row (parity pin)
+    val viaNative = emb.withColumn("cluster",
+      argminSqDistCol(col("features"), cents))
+    val pn = viaNative.queryExecution.executedPlan.toString
+    assert(!pn.contains("UDF("), pn)
+    assert(pn.contains("vec_argmin_sqdist"), pn)
+    val native = viaNative.select("vec_id", "cluster").orderBy("vec_id")
+      .collect().map(r => (r.getLong(0), r.getInt(1)))
+    val kernel = got.map(r => (r.getLong(0), r.getInt(2)))
+    assert(native.toSeq === kernel.toSeq)
   }
 
   test("KMeans.transform AT the k·dim codegen budget keeps the codegen'd " +
@@ -495,16 +481,16 @@ class PlanSpec extends SparkSpec {
     // 128 centroids × dim 64 = 8192 cells = exactly the default
     // budget: the boundary must stay on the codegen side (a <
     // regression would silently push every default-k workload onto
-    // the UDF kernel), with no conf override in play.
+    // the UDF kernel).
     val cents = emb.orderBy("vec_id").limit(128)
       .select("features").collect().map(_.getSeq[Float](0).toArray)
     val model = graft.kmeans.KMeansModel(cents, 0, converged = true)
-    val viaChain = model.transform(emb)
-    val p = viaChain.queryExecution.executedPlan.toString
+    val viaNative = model.transform(emb)
+    val p = viaNative.queryExecution.executedPlan.toString
     assert(!p.contains("UDF("), p)
     assert(!p.contains("ScalaUDF"), p)
     assert(p.contains("vec_argmin_sqdist"), p)
-    val got = viaChain.select("vec_id", "features", "cluster")
+    val got = viaNative.select("vec_id", "features", "cluster")
       .orderBy("vec_id").limit(200).collect()
     assert(got.nonEmpty)
     got.foreach { r =>

@@ -151,6 +151,16 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(dist === driver)
     assert(math.abs(dist.map(_._2).sum - 1.0) < 1e-6)
+    // the driver loop's other merge side: gate 0 -> every round's
+    // partials treeReduce instead of the driver collect-fold
+    val treeKey = "spark.graft.graph.treeReducePartitions"
+    spark.conf.set(treeKey, "0")
+    val viaTree =
+      try Graph.pageRank(g.toDF("src", "dst").repartition(5),
+          "src", "dst", iters = 7, danglingCorrection = true)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+      finally spark.conf.unset(treeKey)
+    assert(viaTree === driver)
   }
 
   test("distributed loop performs zero driver-side collects") {
@@ -967,17 +977,21 @@ class GraphSpec extends SparkSpec {
       gt.adamicAdar(maxDegree = 10).collect().toSeq,
       Graph.bipartiteProject(pairs, "c", "p", maxRightDegree = 3)
         .orderBy("src", "dst").collect().toSeq)
+    val capKey = "spark.graft.graph.csrMaxOrientedRows"
+    val rows = gt.numEdges / 2
     try {
-      // force the wedge algorithm: under the default auto selector
-      // these tiny graphs resolve to csr, which ignores this gate
-      spark.conf.set("spark.graft.graph.triangleAlgo", "wedge")
+      // force the wedge algorithm: under the default csr cap these tiny
+      // graphs resolve to csr, which ignores this gate
+      assert(Graph.useCsr(spark, rows))
+      spark.conf.set(capKey, "0")
+      assert(!Graph.useCsr(spark, rows))
       spark.conf.set(key, "0") // every edge count exceeds the gate
       val viaShuffle = runAll()
       spark.conf.unset(key) // default gate: these tiny graphs broadcast
       val viaBroadcast = runAll()
       assert(viaBroadcast === viaShuffle)
     } finally {
-      spark.conf.unset("spark.graft.graph.triangleAlgo")
+      spark.conf.unset(capKey)
       spark.conf.unset(key)
       gt.unpersist()
     }
@@ -990,29 +1004,28 @@ class GraphSpec extends SparkSpec {
     val gt = Graph.buildGraphTable(
       sym.toDF("src", "dst").repartition(3), "src", "dst",
       assumeDistinct = true)
-    val algoKey = "spark.graft.graph.triangleAlgo"
+    val capKey = "spark.graft.graph.csrMaxOrientedRows"
     val gateKey = "spark.graft.graph.wedgeBroadcastMaxRows"
+    val rows = gt.numEdges / 2
     def runBoth() = (
       gt.triangleCounts().collect().toSeq,
       gt.clusteringCoefficient().collect().toSeq,
       gt.edgeJaccard().collect().toSeq)
     try {
-      val viaAuto = runBoth() // default: auto resolves to csr here
-      spark.conf.set(algoKey, "wedge")
-      val viaWedge = runBoth() // forced wedge, small-graph device
+      assert(Graph.useCsr(spark, rows)) // default cap: csr here
+      val viaCsr = runBoth()
+      spark.conf.set(capKey, "0")
+      assert(!Graph.useCsr(spark, rows)) // cap 0: wedge stream
+      val viaWedge = runBoth() // wedge, small-graph device
       spark.conf.set(gateKey, "0")
-      val viaWedgeBig = runBoth() // forced wedge, shuffle_hash form
-      spark.conf.unset(gateKey)
-      spark.conf.set(algoKey, "csr")
-      val viaCsr = runBoth() // forced csr
-      assert(viaCsr === viaAuto)
+      val viaWedgeBig = runBoth() // wedge, shuffle_hash form
       assert(viaCsr === viaWedge)
       assert(viaCsr === viaWedgeBig)
-      spark.conf.set(algoKey, "nonsense")
+      spark.conf.set(capKey, "nonsense")
       val e = intercept[IllegalArgumentException](gt.triangleCounts())
-      assert(e.getMessage.contains(algoKey))
+      assert(e.getMessage.contains(capKey))
     } finally {
-      spark.conf.unset(algoKey)
+      spark.conf.unset(capKey)
       spark.conf.unset(gateKey)
       gt.unpersist()
     }
@@ -1280,10 +1293,15 @@ class GraphSpec extends SparkSpec {
       sym.toDF("src", "dst").repartition(3), "src", "dst",
       assumeDistinct = true)
     try {
-      val got = gt.adamicAdar(maxDegree = cap).collect().map(r =>
+      def run() = gt.adamicAdar(maxDegree = cap).collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-      assert(got === exp)
-    } finally gt.unpersist()
+      assert(run() === exp) // default: broadcast neighbor list
+      spark.conf.set("spark.graft.graph.aaBroadcastMaxNbRows", "0")
+      assert(run() === exp) // shuffle_hash neighbor list
+    } finally {
+      spark.conf.unset("spark.graft.graph.aaBroadcastMaxNbRows")
+      gt.unpersist()
+    }
   }
 
   test("adamicAdar packed-key gate: an id >= 2^31 that is only a " +
